@@ -20,6 +20,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 LOG_SCHEMA = T.StructType([
@@ -39,9 +40,14 @@ class CheckpointLog:
         self.path = path
 
     def read(self) -> DataFrame:
+        """The log so far; empty only when no run has written it yet. Any
+        other error propagates: a corrupt log must fail the job, not
+        silently turn into a full recompute."""
         try:
             return self.spark.read.schema(LOG_SCHEMA).parquet(self.path)
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], LOG_SCHEMA)
 
     def completed(self, source: str, etape: str) -> set[str]:

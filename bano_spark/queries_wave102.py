@@ -21,27 +21,15 @@ MMR generalizes that to ranked redundancy-aware selection.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from bano_spark.operators.diversify import mmr_select, pairwise_overlap
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
+QUERIES, ORACLES, register = registrar()
 
 K = 4
 W_REL = 2
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _cand(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,25 +16,13 @@ fiscal generalizations of that calendar bookkeeping.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from bano_spark.operators.calendrics import (
     add_business_days, business_elapsed, fiscal_445)
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, register = registrar()
 
 
 def _events_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:

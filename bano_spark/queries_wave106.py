@@ -22,26 +22,14 @@ scheduling algebra of that dependency DAG.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bano_spark.operators.cpm import cpm_forward, cpm_schedule
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
+QUERIES, ORACLES, register = registrar()
 
 DEPTH = 9
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _tasks(spark: SparkSession, sf_dir: str) -> DataFrame:

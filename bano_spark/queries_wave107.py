@@ -18,26 +18,14 @@ signal over k hops.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bano_spark.operators.katz import katz_truncated, path_counts
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
+QUERIES, ORACLES, register = registrar()
 
 K = 4
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _graph(spark: SparkSession, sf_dir: str):

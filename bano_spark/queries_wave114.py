@@ -19,24 +19,12 @@ batch pipeline (bano/cumul.py sequential department processing).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bano_spark.operators.flowshop import johnson_sequence, sequence_makespan
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, register = registrar()
 
 
 def _jobs_sql(dialect: str) -> str:

@@ -15,25 +15,13 @@ keyed-census shape as the reference's batch stats.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bano_spark.operators.agreement import agreement_metrics
 from bano_spark.operators.causal import wald_iv
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, register = registrar()
 
 
 def _labels_sql(dialect: str) -> str:

@@ -19,26 +19,14 @@ keyspace from digests without re-reading either snapshot row-by-row.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bano_spark.operators.merkle import (COMBINE, M, ROW_A, ROW_B, ROW_C,
                                          merkle_diff, merkle_leaves,
                                          merkle_tree)
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, register = registrar()
 
 
 # Snapshot fixtures — identical SQL text in both dialects.

@@ -17,26 +17,14 @@ MAP path (Rabiner 1989 scaling).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bano_spark.operators.hmm import (EMIT_P, INIT_P, TRANS_P,
                                       hmm_forward, hmm_posteriors)
 from bano_spark.queries_wave84 import _VD_FIX_DUCK, _viterbi_input
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, register = registrar()
 
 
 def _dld(vals) -> str:

@@ -20,25 +20,13 @@ scan, so both engines walk the same IEEE/compare chains bit-for-bit.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bano_spark.operators.cachesim import cache_replay
 from bano_spark.operators.hashring import ring_rebalance, ring_tokens
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, register = registrar()
 
 
 _FIX = """

@@ -15,8 +15,6 @@ rapprochement (bano/models.py).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bano_spark import synth
@@ -24,23 +22,9 @@ from bano_spark.operators.langid import (LANG_TRIGRAM_PROFILES,
                                          profiles_values_sql)
 from bano_spark.operators.webtext import mojibake_count_sql
 from bano_spark.queries_wave5 import _v06_cells
+from bano_spark.registry import read as _read, registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+QUERIES, ORACLES, register = registrar()
 
 
 _TOKS = "string_split_regex(trim(lower(text)), '\\s+')"

@@ -10,27 +10,15 @@ integer-valued doubles folded in fixed order."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from bano_spark.operators.joinchain import (chain_dp_sql, _left_deep,
                                             _right_deep,
                                             join_chain_advisor,
                                             join_chain_curve)
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, register = registrar()
 
 
 _FIX = """

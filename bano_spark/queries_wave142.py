@@ -13,24 +13,12 @@ triples in construction order on both engines.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from bano_spark.operators.alias_table import alias_mass_audit, alias_table
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, register = registrar()
 
 
 _FIX = """

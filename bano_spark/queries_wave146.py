@@ -10,25 +10,13 @@ is parameter-shared), exploded via UNION-free array unnest."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from bano_spark.operators.posthoc import (Q_TUKEY_5_INF, Z_BONF_10,
                                           bonferroni_pairs, tukey_hsd)
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, register = registrar()
 
 
 _GROUPS = ["click", "error", "purchase", "signup", "view"]

@@ -30,8 +30,6 @@ is the thing under test; tier selection is covered by unit tests).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -39,19 +37,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from bano_spark.operators.multimodal import (
     IMAGE_FEATURES_SCHEMA, MEDIA_SCHEMA, _stdlib_png_decode,
     _stdlib_wav_decode, audio_features, encode_png, encode_wav_pcm16)
+from bano_spark.registry import registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, register = registrar()
 
 
 def _ids(spark: SparkSession, sf_dir: str) -> DataFrame:

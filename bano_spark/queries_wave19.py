@@ -19,8 +19,6 @@ TextRank reuses the exact pagerank operator TrustRank/host-rank run.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from bano_spark import synth
@@ -29,23 +27,9 @@ from bano_spark.operators.raster import (
 )
 from bano_spark.operators.trajectory import lcss_cte_sql
 from bano_spark.queries_wave15 import _DEM_CELL, _dem_cte
+from bano_spark.registry import read as _read, registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+QUERIES, ORACLES, register = registrar()
 
 
 # ---------------------------------------------------------------------------

@@ -17,29 +17,13 @@ LLR and mirrors extend the keyword and dedup families.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bano_spark.queries_wave15 import _DEM_CELL, _dem_cte
 from bano_spark.queries_wave16 import _D8_DIR_CTES
+from bano_spark.registry import read as _read, registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+QUERIES, ORACLES, register = registrar()
 
 
 # ---------------------------------------------------------------------------

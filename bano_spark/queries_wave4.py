@@ -9,29 +9,13 @@ decode whose header math a SQL oracle reproduces from the ids).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bano_spark import synth
+from bano_spark.registry import read as _read, registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+QUERIES, ORACLES, register = registrar()
 
 
 def _insee_case(col: str, n: int = 10) -> str:
@@ -4433,57 +4417,6 @@ def w_doclen_quantile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round((F.col("_cum") - 1.0) / (F.col("_n") - 1.0), 6)
                     .alias("qrank"))
             .orderBy("doc_id"))
-
-
-# ---------------------------------------------------------------------------
-# w90 — per-source unigram KL divergence vs the corpus distribution
-# (training-mix drift metric: which sources' token distributions
-# deviate most). Pure aggregations + one broadcast of the corpus
-# term distribution; the per-source sum is over the vocabulary.
-# ---------------------------------------------------------------------------
-
-_W90_ORACLE = r"""
-WITH tok AS (
-  SELECT source, unnest(string_split_regex(text, '\s+')) AS term
-  FROM documents
-),
-t AS (SELECT source, term, CAST(count(*) AS DOUBLE) AS c
-      FROM tok WHERE term <> '' GROUP BY 1, 2),
-st AS (SELECT source, sum(c) AS tot FROM t GROUP BY source),
-ct AS (SELECT term, sum(c) AS cc FROM t GROUP BY term),
-g AS (SELECT CAST(sum(cc) AS DOUBLE) AS gtot FROM ct)
-SELECT t.source,
-       round(sum((t.c / st.tot) * ln((t.c / st.tot) / (ct.cc / g.gtot))),
-             6) AS kl
-FROM t
-JOIN st ON st.source = t.source
-JOIN ct ON ct.term = t.term
-CROSS JOIN g
-GROUP BY t.source ORDER BY t.source
-"""
-
-
-@register("source_kl_divergence", _W90_ORACLE)
-def w_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    t = (docs.select("source",
-                     F.explode(F.split("text", r"\s+")).alias("term"))
-         .filter(F.col("term") != "")
-         .groupBy("source", "term")
-         .agg(F.count(F.lit(1)).cast("double").alias("c")))
-    st = t.groupBy("source").agg(F.sum("c").alias("tot"))
-    ct = t.groupBy("term").agg(F.sum("c").alias("cc"))
-    g = ct.agg(F.sum("cc").cast("double").alias("gtot"))
-    return (t.join(st, "source")
-            .join(F.broadcast(ct), "term")
-            .crossJoin(F.broadcast(g))
-            .withColumn("_kl_term",
-                        (F.col("c") / F.col("tot"))
-                        * F.log((F.col("c") / F.col("tot"))
-                                / (F.col("cc") / F.col("gtot"))))
-            .groupBy("source")
-            .agg(F.round(F.sum("_kl_term"), 6).alias("kl"))
-            .orderBy("source"))
 
 
 # ---------------------------------------------------------------------------

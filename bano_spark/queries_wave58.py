@@ -10,26 +10,11 @@ arithmetic — only PSI's final 10-term fold rounds."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
+from bano_spark.registry import read as _read, registrar
 
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+QUERIES, ORACLES, register = registrar()
 
 
 # ---------------------------------------------------------------------------

@@ -2,6 +2,7 @@
 
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from bano_spark import synth
@@ -28,6 +29,25 @@ def test_resumable_write_skips_done(spark, tmp_path):
     assert third == ["2", "3"]
     # output still complete
     assert spark.read.parquet(out).count() == 100
+
+
+def test_checkpoint_log_missing_dir_is_empty(spark, tmp_path):
+    assert CheckpointLog(spark, str(tmp_path / "never_written")).completed(
+        "BAN", "load") == set()
+
+
+def test_checkpoint_log_corrupt_file_raises(spark, tmp_path):
+    log_dir = tmp_path / "log"
+    log_dir.mkdir()
+    (log_dir / "part-00000.parquet").write_text("not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        CheckpointLog(spark, str(log_dir)).completed("BAN", "load")
+
+
+def test_checkpoint_log_unreadable_location_raises(spark):
+    # an error other than "path not found" is not an empty log
+    with pytest.raises(Exception, match="nosuchscheme"):
+        CheckpointLog(spark, "nosuchscheme://host/log").read()
 
 
 def _tile_lines(path: Path, coords):

@@ -45,11 +45,39 @@ def _tag(v) -> str:
     return f"s:{v}"
 
 
+def duplicate_columns(cols) -> list[str]:
+    """Names that occur more than once: canon() pairs columns by name, so
+    repeated names would pair arbitrarily between the two engines."""
+    return sorted({c for c in cols if cols.count(c) > 1})
+
+
 def canon(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = ["|".join(_tag(r[i]) for i in order) for r in rows]
     out.sort()
     return out
+
+
+def first_diff_row(a: list[str], b: list[str]) -> int:
+    """Index of the first canonical row that differs. When one side is a
+    prefix of the other (an empty side included), the first row that
+    only the longer side has."""
+    return next((i for i, (x, y) in enumerate(zip(a, b)) if x != y),
+                min(len(a), len(b)))
+
+
+def diff_report(a: list[str], b: list[str]) -> list[str]:
+    """Lines describing how the canonical rows a (spark) and b (duckdb)
+    differ: the row-count mismatch first, then the first differing row."""
+    lines = [f"{len(a)} vs {len(b)} rows"
+             + (" (row count mismatch)" if len(a) != len(b) else "")]
+    bad = first_diff_row(a, b)
+    lines.append(f"first diff row {bad}:")
+    if 0 <= bad < len(a):
+        lines.append(f"  spark:  {a[bad][:300]}")
+    if 0 <= bad < len(b):
+        lines.append(f"  duckdb: {b[bad][:300]}")
+    return lines
 
 
 def main() -> None:
@@ -88,6 +116,11 @@ def main() -> None:
                   f"{str(e).splitlines()[0][:160]}")
             continue
         dt = time.time() - t0
+        dups = duplicate_columns(s_cols) + duplicate_columns(d_cols)
+        if dups:
+            failures.append(name)
+            print(f"FAIL {name}: duplicate output column names {dups}")
+            continue
         if sorted(s_cols) != sorted(d_cols):
             failures.append(name)
             print(f"FAIL {name}: columns {sorted(s_cols)} "
@@ -96,14 +129,7 @@ def main() -> None:
         a, b = canon(s_rows, s_cols), canon(d_rows, d_cols)
         if a != b:
             failures.append(name)
-            bad = next((i for i, (x, y) in enumerate(zip(a, b))
-                        if x != y), min(len(a), len(b)) - 1)
-            print(f"FAIL {name}: {len(a)} vs {len(b)} rows; first "
-                  f"diff row {bad}:")
-            if bad < len(a):
-                print(f"  spark:  {a[bad][:300]}")
-            if bad < len(b):
-                print(f"  duckdb: {b[bad][:300]}")
+            print(f"FAIL {name}: " + "\n".join(diff_report(a, b)))
         else:
             print(f"PASS {name}: {len(a)} rows strict "
                   f"type+repr ({dt:.1f}s)")
